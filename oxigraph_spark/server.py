@@ -2,14 +2,25 @@
 
 Reference: the upstream server binary (``cli/src/main.rs`` — Query/
 Update routes with content negotiation over the results serializers).
-Spark re-expression: this is an INTEROP endpoint for bounded result
-sets — the handler collects each response driver-side through the
-bounded ``results_io`` document writers (responses are protocol
-payloads, not datasets).  It is NOT a high-QPS serving layer: Spark's
-per-query job latency (~100 ms locally) and the driver-side collect
-bound it to development, testing, and federation targets (our own
-SERVICE client speaks to it — see ``tests/test_server.py``).  Big
-exports go through the distributed writers instead.
+Spark re-expression: the handler collects each response driver-side
+through the bounded ``results_io`` document writers (responses are
+protocol payloads, capped at ``max_rows``; big exports go through the
+distributed writers instead).
+
+Prepared execution: a SELECT answered as results JSON or XML runs
+``Store.prepare(text, max_rows)``, the bounded frame kept in the
+store's plan-cache entry, and ASK re-collects the cached frame, which
+the compiler already caps at one row.  A repeated text therefore re-runs
+one QueryExecution: no parse, analysis, optimization or physical
+planning, and under AQE no new broadcast or shuffle-map stage, since
+the entry pins its executed plan with the broadcast relations and
+shuffle outputs it built.  An entry is dropped when it falls out of the
+256-entry LRU or when ``/update`` (or a Graph Store write) swaps in the
+Store of the next generation, whose cache starts empty.  Texts calling
+NOW(), RAND(), UUID(), STRUUID() or BNODE() are compiled per request.
+CSV, TSV and CONSTRUCT/DESCRIBE responses add a per-request formatting
+projection over the cached frame, so they re-plan but do not re-compile.
+Our own SERVICE client speaks to this endpoint (``tests/test_server.py``).
 
 Routes (SPARQL 1.1 Protocol §2):
 - ``GET  /query?query=…``             (URL-encoded)
@@ -72,10 +83,21 @@ class SparqlEndpoint:
         from .sources.ntriples import format_term
         from pyspark.sql import functions as F
         ast = parse_query(sparql)
+        # SELECT as results JSON/XML: the cached bounded frame, run as is
+        document = (isinstance(ast, A.SelectQuery)
+                    and "tab-separated-values" not in accept
+                    and "csv" not in accept)
         with self._lock:
-            df = self._store.query(sparql)
+            df = (self._store.prepare(sparql, self.max_rows) if document
+                  else self._store.query(sparql))
+        if document:
+            if "sparql-results+xml" in accept:
+                return ("application/sparql-results+xml",
+                        R.to_xml_document(df))
+            return ("application/sparql-results+json",
+                    R.to_json_document(df))
         if isinstance(ast, A.AskQuery):
-            val = len(df.take(1)) > 0
+            val = len(df.collect()) > 0  # compile_query caps ASK at 1 row
             if "xml" in accept:
                 return ("application/sparql-results+xml",
                         '<?xml version="1.0"?><sparql xmlns="http://www.w3.'
@@ -93,13 +115,7 @@ class SparqlEndpoint:
         if "tab-separated-values" in accept:
             return ("text/tab-separated-values",
                     R.to_tsv_document(df, limit=self.max_rows))
-        if "csv" in accept:
-            return ("text/csv", R.to_csv_document(df, limit=self.max_rows))
-        if "sparql-results+xml" in accept:
-            return ("application/sparql-results+xml",
-                    R.to_xml_document(df, limit=self.max_rows))
-        return ("application/sparql-results+json",
-                R.to_json_document(df, limit=self.max_rows))
+        return ("text/csv", R.to_csv_document(df, limit=self.max_rows))
 
     def update(self, sparql: str) -> None:
         with self._lock:

@@ -35,6 +35,14 @@ def get_spark(app: str = "oxigraph-spark", shuffle_partitions: int | None = None
         # suite + fuzz in one session tipped 8g); env-overridable, and a
         # real cluster sets its own driver sizing anyway
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        # Tungsten page size, fixed: Spark derives it from heap / cores
+        # (capped at 64 MB), and every broadcast hash relation allocates
+        # at least one page — a 25-row build side held 67 MB.  The plan
+        # cache keeps executed plans, and with them their broadcast
+        # relations (store.py), so 1 MB pages keep that pinned memory
+        # proportional to the data.  Static conf: a session the caller
+        # creates without get_spark keeps Spark's default.
+        .config("spark.buffer.pageSize", "1m")
         .config("spark.ui.enabled", "false")
         # static conf: Python-side call-site capture off (see configure())
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")

@@ -24,6 +24,7 @@ from typing import Dict, Iterable, Optional, Tuple
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from ..lru import LRUCache
 from ..model import terms as T
 from .tables import (load_table, parquet_num_rows as _parquet_num_rows,
                      table_exists as _table_exists)
@@ -181,8 +182,10 @@ class DirectMappingSource:
         # filters) over the immutable parquet inputs — memoized so
         # repeated queries skip re-deriving the same scan DataFrames
         # (round-4 plan-build latency work; DataFrames are immutable
-        # and safe to share across queries)
-        self._scan_memo: Dict = {}
+        # and safe to share across queries).  Keys carry filter and
+        # subject constants, so a templated workload adds one per
+        # execution: the 256 most recently used are kept.
+        self._scan_memo = LRUCache(256)
         # parameter-INDEPENDENT column pieces (term-struct select lists,
         # not-null guards): a templated workload (same shapes, different
         # constants) misses _scan_memo on every execution but shares
@@ -358,8 +361,9 @@ class DirectMappingSource:
         memo_key = (tuple(p_lexes), repr(sorted((native_filters or {}).items())),
                     repr(const_preds), subject_iri,
                     repr(sorted(optional_idx or ())))
-        if memo_key in self._scan_memo:
-            return self._scan_memo[memo_key]
+        hit = self._scan_memo.get(memo_key)
+        if hit is not None:
+            return hit
         infos = []
         for p in p_lexes:
             info = self._pred_info.get(p)
@@ -423,7 +427,7 @@ class DirectMappingSource:
             for op, val in conds:
                 out = out.where(_native_cond(F.col(col), dt, op, val))
         out = out.select(*cols)
-        self._scan_memo[memo_key] = out
+        self._scan_memo.put(memo_key, out)
         return out
 
     def const_object_pred(self, p_lex, kind, lex, datatype=None, lang=None):
@@ -476,8 +480,9 @@ class DirectMappingSource:
                     info = self._pred_info.get(p_lex)
                     if info is not None and info[2] is None:
                         memo_key = (p_lex, repr(sorted(native_filters)))
-                        if memo_key in self._scan_memo:
-                            return self._scan_memo[memo_key]
+                        hit = self._scan_memo.get(memo_key)
+                        if hit is not None:
+                            return hit
                         t, col, _ = info
                         df = self._raw[t]
                         dt = dict(df.dtypes)[col]
@@ -495,7 +500,7 @@ class DirectMappingSource:
                                 T.default_graph().alias("g")]
                             self._piece_memo[piece_key] = cols
                         out = df.select(*cols)
-                        self._scan_memo[memo_key] = out
+                        self._scan_memo.put(memo_key, out)
                         return out
                 return self._frames[p_lex]
             return self.spark.createDataFrame(

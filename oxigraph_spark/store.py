@@ -6,14 +6,34 @@ and of pyoxigraph's ``Store.query`` (``python/src/store.rs`` ·
 
 from __future__ import annotations
 
+import dataclasses
 from typing import Dict, Optional
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from .algebra import ast as A
 from .algebra.parser import parse_query
+from .lru import LRUCache
 from .model import terms as T
 from .plans.compiler import Compiler
+
+# functions whose value differs per evaluation (SPARQL 1.1 §17.4)
+_VOLATILE_FNS = frozenset({"NOW", "RAND", "UUID", "STRUUID", "BNODE"})
+
+
+def _volatile(node) -> bool:
+    """True when the algebra calls a ``_VOLATILE_FNS`` function outside
+    SERVICE (a SERVICE pattern is a compile-time snapshot by design)."""
+    if isinstance(node, A.ECall) and node.name.upper() in _VOLATILE_FNS:
+        return True
+    if isinstance(node, A.Service):
+        return False
+    if isinstance(node, (tuple, list)):
+        return any(_volatile(x) for x in node)
+    if dataclasses.is_dataclass(node):
+        return any(_volatile(getattr(node, f.name))
+                   for f in dataclasses.fields(node))
+    return False
 
 
 class Store:
@@ -31,14 +51,22 @@ class Store:
         self.service_pool = service_pool
         # compiled-plan cache (the prepared-query analog of upstream's
         # ``Query`` objects, ``lib/spareval/src/lib.rs`` ·
-        # ``SparqlEvaluator::parse_query`` reuse): SPARQL text → compiled
-        # DataFrame.  DataFrames are immutable logical plans, so serving
-        # the same object for a repeated query is semantically identical
-        # to recompiling — it removes the driver-side parse + py4j plan
-        # build + Catalyst analysis, which dominates short-query latency
-        # (61% of the r3 headline wall).  Keyed additionally on the
-        # source's mutation ``generation`` so updates invalidate.
-        self._plan_cache: "dict" = {}
+        # ``SparqlEvaluator::parse_query`` reuse): (SPARQL text, source
+        # ``generation``, union flag) → (compiled DataFrame, {max_rows:
+        # bounded DataFrame}).  A DataFrame owns one QueryExecution, so
+        # serving the same object skips parse, py4j plan build and
+        # Catalyst analysis; re-collecting it (``prepare``) also skips
+        # optimize and physical planning and, under AQE, re-reads the
+        # broadcast relations and shuffle outputs its first run built.
+        # Those stay valid while the generation is unchanged; an update
+        # bumps it (and ``update`` returns a new Store with an empty
+        # cache), so a stale entry is never served again and ages out.
+        # An entry therefore pins executed broadcast relations (small:
+        # session.get_spark fixes 1 MB Tungsten pages); the cache keeps
+        # the 256 most recently used entries.  Texts calling NOW(),
+        # RAND(), UUID(), STRUUID() or BNODE() are never cached: their
+        # values must differ per run, and a cached plan freezes them.
+        self._plan_cache = LRUCache(256)
 
     @classmethod
     def from_tables(cls, spark: SparkSession, sf_dir: str, tables=None,
@@ -88,13 +116,14 @@ class Store:
         name; ``python/src/store.rs`` · ``PyStore::query``).
 
         ``use_cache=False`` forces a fresh compile (used by tests and
-        by ``explain`` when plan construction itself is under study)."""
-        key = (sparql, getattr(self.source, "generation", 0),
-               use_default_graph_as_union)
+        by ``explain`` when plan construction itself is under study);
+        a text calling NOW(), RAND(), UUID(), STRUUID() or BNODE() is
+        compiled afresh on every call regardless."""
+        key = self._cache_key(sparql, use_default_graph_as_union)
         if use_cache:
             hit = self._plan_cache.get(key)
             if hit is not None:
-                return hit
+                return hit[0]
         ast = parse_query(sparql)
         compiler = Compiler(
             self.spark, self.source, optimize=self.optimize,
@@ -102,11 +131,29 @@ class Store:
             service_max_total_bindings=self.service_max_total_bindings,
             service_pool=self.service_pool)
         df = compiler.compile_query(ast)
-        if use_cache:
-            if len(self._plan_cache) > 256:
-                self._plan_cache.clear()
-            self._plan_cache[key] = df
+        if use_cache and not _volatile(ast):
+            self._plan_cache.put(key, (df, {}))
         return df
+
+    def prepare(self, sparql: str, max_rows: int) -> DataFrame:
+        """``query(sparql).limit(max_rows)``, kept in the plan-cache entry
+        of ``sparql``: repeated calls return the same DataFrame, so each
+        ``collect()`` re-runs one QueryExecution — its optimized and
+        physical plan and, under AQE, its materialized broadcast and
+        shuffle stages.  The protocol endpoint serves result documents
+        from this frame.  A text the cache does not keep (volatile
+        functions) gets a fresh bounded frame per call."""
+        df = self.query(sparql)
+        entry = self._plan_cache.get(self._cache_key(sparql, False))
+        if entry is None or entry[0] is not df:
+            return df.limit(max_rows)
+        bounded = entry[1].get(max_rows)
+        if bounded is None:
+            bounded = entry[1].setdefault(max_rows, df.limit(max_rows))
+        return bounded
+
+    def _cache_key(self, sparql: str, union: bool) -> tuple:
+        return (sparql, getattr(self.source, "generation", 0), union)
 
     def explain(self, sparql: str, mode: str = "formatted") -> str:
         """Compile a SPARQL query and return its execution explanation:
@@ -219,9 +266,9 @@ class Store:
         return self.source.quads().count()
 
     def ask(self, sparql: str) -> bool:
-        # take(1) bounds work even on engines that don't push the limit
-        # (compile_query already emits limit(1) for ASK)
-        return len(self.query(sparql).take(1)) > 0
+        # compile_query caps ASK with limit(1), so collect() is bounded
+        # and re-runs the cached frame's own QueryExecution
+        return len(self.query(sparql).collect()) > 0
 
     def update(self, sparql: str) -> "Store":
         """Run SPARQL Update ops; returns a NEW Store over the rewritten

@@ -13,8 +13,6 @@ hand-written case enumerates."""
 import random
 
 import pytest
-
-pytestmark = pytest.mark.slow
 from pyspark.sql.types import StructField, StructType
 
 from oxigraph_spark.algebra import ast as A
@@ -22,6 +20,8 @@ from oxigraph_spark.model import terms as T
 from oxigraph_spark.operators.update import MutableQuadSource
 from oxigraph_spark.plans.compiler import _term_to_py
 from oxigraph_spark.store import Store
+
+pytestmark = pytest.mark.slow
 
 EX = "urn:ex:"
 PREDS = ["p", "q", "r"]

@@ -92,6 +92,115 @@ def test_scan_memo_reuses_dataframes(spark, sf_dir):
     assert e is not c
 
 
+def test_volatile_texts_bypass_plan_cache(spark):
+    """NOW(), RAND(), UUID(), STRUUID() and BNODE() must differ per run,
+    and a cached plan freezes them (NOW() at compile, Spark's per-plan
+    seeds for the rest): such texts are compiled per call."""
+    from tests.test_semantics import iri, lit, quads_store
+    st = quads_store(spark, [(iri("a"), iri("name"), lit("Alice"))])
+    q = ("SELECT (STR(NOW()) AS ?now) (RAND() AS ?r) (UUID() AS ?u) "
+         "(STRUUID() AS ?su) (BNODE() AS ?b) WHERE {}")
+    a, b = (st.query(q).collect()[0] for _ in range(2))
+    for var in ("now", "r", "u", "su", "b"):
+        assert a[var]["lex"] != b[var]["lex"], var
+    assert st.query(q) is not st.query(q)
+    assert len(st._plan_cache) == 0
+    # nested in a FILTER / EXISTS counts too; a plain text is cached
+    nested = ("SELECT ?n WHERE { ?s <urn:ex:name> ?n "
+              "FILTER EXISTS { FILTER(RAND() < 2) } }")
+    assert st.query(nested) is not st.query(nested)
+    plain = "SELECT ?n WHERE { ?s <urn:ex:name> ?n }"
+    assert st.query(plain) is st.query(plain)
+    assert st.prepare(plain, 10) is st.prepare(plain, 10)
+    assert st.prepare(plain, 10) is not st.prepare(plain, 5)
+    assert st.prepare(q, 10) is not st.prepare(q, 10)
+
+
+def test_lru_cache_evicts_least_recently_used():
+    from oxigraph_spark.lru import LRUCache
+    c = LRUCache(3)
+    for k in "abc":
+        c.put(k, k.upper())
+    assert c.get("a") == "A"          # refreshes a
+    c.put("d", "D")                   # evicts b, the least recent
+    assert c.keys() == ["c", "a", "d"]
+    assert c.get("b") is None and c.get("b", 0) == 0
+    c.put("c", "C2")                  # re-put refreshes, no eviction
+    c.put("e", "E")                   # evicts a
+    assert c.keys() == ["d", "c", "e"] and c.get("c") == "C2"
+    assert len(c) == 3
+
+
+def test_lru_cache_concurrent_stress():
+    """More threads than cores hammer one cache with a tiny switch
+    interval: no lost update may leave it over capacity, with duplicate
+    keys, or with a value stored under another key."""
+    import random
+    import sys
+    import threading
+    from oxigraph_spark.lru import LRUCache
+    c = LRUCache(64)
+    errors = []
+
+    def worker(tid):
+        rng = random.Random(tid)
+        try:
+            for i in range(3000):
+                c.put((tid, i), (tid, i))
+                got = c.get((rng.randrange(8), rng.randrange(i + 1)))
+                assert got is None or isinstance(got, tuple)
+        except Exception as ex:  # noqa: BLE001 — reported below
+            errors.append(ex)
+
+    prev = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(t,))
+                   for t in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(prev)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    keys = c.keys()
+    assert len(keys) == len(set(keys)) == len(c) == 64
+    assert all(c.get(k) == k for k in keys)
+
+
+def test_plan_cache_is_bounded_lru(spark):
+    """The plan cache keeps the 256 most recently used texts; a hit
+    refreshes its entry, so eviction drops the least recently used."""
+    from oxigraph_spark.lru import LRUCache
+    from tests.test_semantics import iri, lit, quads_store
+    st = quads_store(spark, [(iri("a"), iri("name"), lit("Alice"))])
+    assert isinstance(st._plan_cache, LRUCache)
+    assert st._plan_cache.capacity == 256
+    st._plan_cache = LRUCache(2)  # same policy, small enough to fill
+    q1, q2, q3 = (f"SELECT ?n WHERE {{ ?s <urn:ex:name> ?n }} LIMIT {i}"
+                  for i in (1, 2, 3))
+    d1, d2 = st.query(q1), st.query(q2)
+    assert st.query(q1) is d1         # hit: q1 is now the most recent
+    st.query(q3)                      # evicts q2
+    assert st.query(q1) is d1
+    assert st.query(q2) is not d2
+
+
+def test_scan_memo_is_bounded(spark, sf_dir):
+    """One memo entry per distinct filter constant, at most 256 kept."""
+    from oxigraph_spark.sources.direct_mapping import DirectMappingSource
+    src = DirectMappingSource(spark, sf_dir, tables=["customer"])
+    p = "urn:g:customer#c_acctbal"
+    for i in range(300):
+        src.scan(p, native_filters=[("gt", float(i))])
+    assert len(src._scan_memo) == 256
+    last = src.scan(p, native_filters=[("gt", 299.0)])
+    assert src.scan(p, native_filters=[("gt", 299.0)]) is last
+    assert src._scan_memo.get((p, repr([("gt", 0.0)]))) is None
+
+
 def test_key_width_64_equivalence(spark, sf_dir):
     """Default compact 64-bit dictionary keys (source.key_width=64,
     SURVEY §1.4 variant): joins, closures, aggregates, MINUS and

@@ -620,3 +620,188 @@ def test_service_max_total_bindings_store_option(spark):
     finally:
         Compiler.SERVICE_HANDLERS.pop(svc, None)
         ep.stop()
+
+
+# -- prepared execution -----------------------------------------------------
+
+_JOIN_Q = ("SELECT ?n (COUNT(*) AS ?c) WHERE { ?s <urn:ex:name> ?n . "
+           "?s <urn:ex:age> ?a } GROUP BY ?n")
+
+
+def _query_url(base, q):
+    return f"{base}/query?query={urllib.parse.quote(q)}"
+
+
+def test_prepared_select_reuses_bounded_frame(spark, monkeypatch):
+    """A repeated SELECT text is served from the plan-cache entry's own
+    bounded frame: the same DataFrame reaches the document writer, the
+    writer gets no per-request limit, and the documents are identical."""
+    from oxigraph_spark.sources import results_io as R
+    seen = []
+    for name in ("to_json_document", "to_xml_document"):
+        orig = getattr(R, name)
+
+        def spy(df, limit=None, _orig=orig, _name=name):
+            seen.append((_name, df, limit))
+            return _orig(df, limit)
+
+        monkeypatch.setattr(R, name, spy)
+    ep, base = _mk_endpoint(spark)
+    try:
+        for accept in ("application/sparql-results+json",
+                       "application/sparql-results+xml"):
+            docs = [_get(_query_url(base, _JOIN_Q), accept=accept)
+                    for _ in range(2)]
+            assert docs[0] == docs[1]
+        assert "Alice" in docs[0][1]
+        frames = [df for _name, df, _limit in seen]
+        assert len(frames) == 4 and all(f is frames[0] for f in frames)
+        assert [limit for _n, _df, limit in seen] == [None] * 4
+        assert frames[0] is ep._store.prepare(_JOIN_Q, ep.max_rows)
+    finally:
+        ep.stop()
+
+
+def test_prepared_frame_keeps_row_bound(spark):
+    """The row bound lives in the cached frame: the document writers get
+    no limit, yet a repeated request still returns max_rows rows."""
+    from tests.test_semantics import iri, lit, quads_store
+    st = quads_store(spark, [(iri(x), iri("name"), lit(x))
+                             for x in ("a", "b", "c")])
+    ep = SparqlEndpoint(st, max_rows=2)
+    q = "SELECT ?n WHERE { ?s <urn:ex:name> ?n }"
+    for _ in range(2):
+        doc = json.loads(ep.query_response(q, "")[1])
+        assert len(doc["results"]["bindings"]) == 2
+        xml = ep.query_response(q, "application/sparql-results+xml")[1]
+        assert xml.count("<result>") == 2
+    assert len(st.query(q).collect()) == 3
+
+
+def test_prepared_ask_reuses_cached_frame(spark, monkeypatch):
+    ep, base = _mk_endpoint(spark)
+    st = ep._store
+    frames = []
+    orig = st.query
+
+    def spy(sparql, *a, **kw):
+        df = orig(sparql, *a, **kw)
+        frames.append(df)
+        return df
+
+    monkeypatch.setattr(st, "query", spy)
+    try:
+        q = "ASK { <urn:ex:a> <urn:ex:name> ?n . ?n ?p ?o }"
+        yes = "ASK { <urn:ex:a> <urn:ex:age> ?a }"
+        assert [_get(_query_url(base, q))[1] for _ in range(2)] \
+            == ['{"head":{},"boolean":false}'] * 2
+        assert [_get(_query_url(base, yes))[1] for _ in range(2)] \
+            == ['{"head":{},"boolean":true}'] * 2
+        assert frames[0] is frames[1] and frames[2] is frames[3]
+        assert frames[0] is not frames[2]
+    finally:
+        ep.stop()
+
+
+def test_prepared_request_runs_no_new_map_or_broadcast_stage(spark):
+    """Counted with StatusTracker under a job group: the first request
+    builds the join's broadcast and the GROUP BY shuffle; the second
+    re-runs the executed plan, so it launches neither again."""
+    from tests.test_semantics import iri, lit, quads_store
+    st = quads_store(spark, [
+        (iri(f"s{i}"), iri("name"), lit(f"n{i % 3}")) for i in range(12)]
+        + [(iri(f"s{i}"), iri("age"), lit(str(i))) for i in range(12)])
+    ep = SparqlEndpoint(st)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def run(group):
+        sc.setJobGroup(group, group)
+        try:
+            doc = ep.query_response(_JOIN_Q, "")[1]
+        finally:
+            sc._jsc.clearJobGroup()
+        jobs = tracker.getJobIdsForGroup(group)
+        ran = 0
+        for j in jobs:
+            for s in tracker.getJobInfo(j).stageIds:
+                info = tracker.getStageInfo(s)
+                if info is not None and info.numCompletedTasks > 0:
+                    ran += 1
+        return doc, len(jobs), ran
+
+    first = run("prepared-first")
+    second = run("prepared-second")
+    assert first[0] == second[0]
+    counts = {b["n"]["value"]: b["c"]["value"]
+              for b in json.loads(first[0])["results"]["bindings"]}
+    assert counts == {"n0": "4", "n1": "4", "n2": "4"}
+    # under AQE every broadcast build and shuffle map stage is a job of
+    # its own: the first request runs at least those two plus the result
+    assert first[1] >= 3
+    # the second runs one result job; its parent map stage is skipped
+    assert second[1:] == (1, 1)
+
+
+def test_concurrent_cold_text(spark):
+    """8 threads send one never-seen text at the same moment: every
+    answer is correct whichever thread compiles and caches it."""
+    import concurrent.futures as cf
+    import threading
+
+    ep, base = _mk_endpoint(spark)
+    gate = threading.Barrier(8)
+    q = ("SELECT ?s ?n WHERE { ?s <urn:ex:name> ?n . "
+         "OPTIONAL { ?s <urn:ex:age> ?a } } ORDER BY ?n")
+
+    def client(_):
+        gate.wait()
+        _, body = _get(_query_url(base, q))
+        return [(b["s"]["value"], b["n"]["value"])
+                for b in json.loads(body)["results"]["bindings"]]
+
+    try:
+        with cf.ThreadPoolExecutor(max_workers=8) as pool:
+            got = list(pool.map(client, range(8)))
+        assert got == [[("urn:ex:a", "Alice"), ("urn:ex:b", "Bob")]] * 8
+    finally:
+        ep.stop()
+
+
+def test_update_serves_new_generation(spark):
+    """POST /update swaps in a Store over the next generation, so the
+    same text is compiled and cached anew and sees the new data."""
+    ep, base = _mk_endpoint(spark)
+    q = "SELECT ?n WHERE { ?s <urn:ex:name> ?n } ORDER BY ?n"
+
+    def names():
+        _, body = _get(_query_url(base, q))
+        return [b["n"]["value"]
+                for b in json.loads(body)["results"]["bindings"]]
+
+    try:
+        assert names() == names() == ["Alice", "Bob"]
+        req = urllib.request.Request(
+            f"{base}/update",
+            data=b'INSERT DATA { <urn:ex:c> <urn:ex:name> "Cara" }',
+            headers={"Content-Type": "application/sparql-update"})
+        with urllib.request.urlopen(req, timeout=30) as r:
+            assert r.status == 204
+        assert names() == ["Alice", "Bob", "Cara"]
+    finally:
+        ep.stop()
+
+
+def test_volatile_text_differs_per_request(spark):
+    """NOW()/RAND()/UUID()/STRUUID()/BNODE() texts are compiled per
+    request: a repeated text is not a frozen copy of its first answer."""
+    ep, base = _mk_endpoint(spark)
+    q = ("SELECT (STR(NOW()) AS ?now) (RAND() AS ?r) (UUID() AS ?u) "
+         "(STRUUID() AS ?su) (BNODE() AS ?b) WHERE {}")
+    try:
+        a, b = (json.loads(_get(_query_url(base, q))[1])
+                ["results"]["bindings"][0] for _ in range(2))
+        for var in ("now", "r", "u", "su", "b"):
+            assert a[var]["value"] != b[var]["value"], var
+    finally:
+        ep.stop()
