@@ -22,15 +22,20 @@ Scale-critical choices:
 
 from __future__ import annotations
 
+import inspect
 import itertools
+import json
+import math
 import re
 import uuid as _uuid
 from dataclasses import dataclass, replace
 from datetime import datetime, timezone
+from decimal import ROUND_HALF_UP, Context, Decimal
 from functools import reduce
 from typing import Dict, List, Optional, Tuple, Union
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql.types import ArrayType, StructField, StructType
 
 from ..algebra import ast as A
 from ..functions import builtins as B
@@ -437,6 +442,10 @@ class Compiler:
                  service_pool: int = 4):
         self.spark = spark
         self.source = source  # exposes .scan(p_lex) -> DataFrame(s,p,o,g)
+        # DirectMappingSource.scan applies FILTER-derived raw-column
+        # predicates (native_filters) before building term structs
+        self._native_scans = "native_filters" in inspect.signature(
+            source.scan).parameters
         self.optimize = optimize
         # False disables the FedX bind-join seed (used by explain-only
         # compilation: seeding collects local bindings, i.e. runs Spark
@@ -549,17 +558,11 @@ class Compiler:
 
     # -- triple patterns ------------------------------------------------
 
-    def _c_TriplePattern(self, tp: A.TriplePattern, graph_ctx) -> Compiled:
+    def _c_TriplePattern(self, tp: A.TriplePattern, graph_ctx,
+                         native_filters=None) -> Compiled:
         p_lex = tp.p.iri if isinstance(tp.p, A.NamedNode) else None
-        nf = getattr(self, "_scan_native_filters", None)
-        self._scan_native_filters = None  # consume: hints apply to ONE scan
-        if nf:
-            try:
-                df = self.source.scan(p_lex, native_filters=nf)
-            except TypeError:  # source without native-pushdown support
-                df = self.source.scan(p_lex)
-        else:
-            df = self.source.scan(p_lex)
+        df = self.source.scan(p_lex, native_filters=native_filters) \
+            if native_filters else self.source.scan(p_lex)
         df = self._graph_filter(df, graph_ctx)
 
         conds: List[Column] = []
@@ -683,24 +686,19 @@ class Compiler:
             nonlocal pending
             # single-pattern scans get the same native-predicate pushdown
             # as star scans: conjuncts over just this pattern's object var
-            # translate to raw-column predicates (parquet PushedFilters);
-            # the term-level filter still applies below, unchanged
+            # translate to raw-column predicates (parquet PushedFilters).
+            # The scan applies every one; an exact one leaves `pending`,
+            # so no term-level filter re-checks it, a hint stays there.
+            nf = None
             if (isinstance(u, A.TriplePattern) and isinstance(u.p, A.NamedNode)
                     and isinstance(u.o, A.Var) and graph_ctx is None):
-                pt0 = getattr(self.source, "pred_types", None)
-                if pt0 is not None:
-                    vc, _ = pt0(u.p.iri)
-                    hints = []
-                    for e in pending:
-                        if _expr_vars(e) == {u.o.name}:
-                            tr = _native_preds(e, u.o.name, vc)
-                            if tr:
-                                hints.extend(tr)
-                    if hints:
-                        self._scan_native_filters = hints
-            c = u if isinstance(u, Compiled) else \
-                self.compile_pattern(u, graph_ctx)
-            self._scan_native_filters = None
+                nf, exact = self._native_filters(pending, u.p.iri, u.o.name)
+                pending = [e for e in pending if e not in exact]
+            if nf:
+                c = self._c_TriplePattern(u, graph_ctx, native_filters=nf)
+            else:
+                c = u if isinstance(u, Compiled) else \
+                    self.compile_pattern(u, graph_ctx)
             mine = [e for e in pending
                     if _expr_vars(e) <= c.vars and not _find_exists(e)]
             if mine:
@@ -732,14 +730,36 @@ class Compiler:
                 acc = self._apply_conjuncts(acc, ready, graph_ctx)
         return self._apply_conjuncts(acc, pending, graph_ctx)
 
+    def _native_filters(self, pending: List[A.Expression], p_lex: str,
+                        var: str):
+        """Raw-column predicates for the scan of ``?s <p_lex> ?var`` from
+        the conjuncts in ``pending`` over ``?var`` alone: ([(op, value)],
+        [conjuncts translated exactly]).  Both are empty when the
+        source's scans take no native filters."""
+        pt = getattr(self.source, "pred_types", None)
+        if pt is None or not self._native_scans:
+            return [], []
+        vc, nsub = pt(p_lex)
+        preds: List = []
+        exact: List[A.Expression] = []
+        for e in pending:
+            if _expr_vars(e) == {var}:
+                tr = _native_preds(e, var, vc, nsub)
+                if tr:
+                    preds.extend(tr[0])
+                    if tr[1]:
+                        exact.append(e)
+        return preds, exact
+
     def _extract_star_groups(self, pats: List, graph_ctx,
-                             pending: Optional[List] = None):
+                             pending: List[A.Expression]):
         """Property-table optimization: patterns sharing a subject variable
         whose concrete predicates all map to ONE source table compile to a
         single scan (source.star_scan) instead of an N-way self-join.
         This is the star-join shape every relational-over-RDF workload has
         (SELECT of many attributes of one entity) — at 100 TB it removes
-        N-1 shuffles per entity star."""
+        N-1 shuffles per entity star.  Conjuncts a star scan applies
+        exactly are removed from ``pending``."""
         star_scan = getattr(self.source, "star_scan", None)
         if not self.optimize or star_scan is None or graph_ctx is not None:
             return [], pats
@@ -797,21 +817,16 @@ class Compiler:
                 continue
             # translate single-variable FILTER conjuncts into native
             # column predicates and hand them to the scan — they reach
-            # parquet as PushedFilters (row-group pruning at 100 TB); the
-            # term-level filter still applies above, so these only prune
+            # parquet as PushedFilters (row-group pruning at 100 TB).  Once
+            # the scan exists, exactly translated conjuncts leave
+            # `pending`; hints keep their term-level filter above.
             nf: Dict[int, list] = {}
-            pt0 = getattr(self.source, "pred_types", None)
-            for e in (pending or []):
-                vs = _expr_vars(e)
-                if len(vs) != 1:
-                    continue
-                (v0,) = tuple(vs)
-                for i, tp in enumerate(proj):
-                    if tp.o.name == v0 and pt0 is not None:
-                        vc, _ = pt0(tp.p.iri)
-                        tr = _native_preds(e, v0, vc)
-                        if tr:
-                            nf.setdefault(i, []).extend(tr)
+            exact: List[A.Expression] = []
+            for i, tp in enumerate(proj):
+                preds, ex = self._native_filters(pending, tp.p.iri, tp.o.name)
+                if preds:
+                    nf[i] = preds
+                    exact.extend(ex)
             df = star_scan([tp.p.iri for tp in proj], native_filters=nf or None,
                            const_preds=const_preds or None,
                            subject_iri=subject_iri)
@@ -819,6 +834,7 @@ class Compiler:
                 loose.extend(proj)
                 loose.extend(consts)
                 continue
+            pending[:] = [e for e in pending if e not in exact]
             sel = ([df["s"].alias(skey)] if skind == "v" else []) + [
                 df[f"o{i}"].alias(v) for i, v in enumerate(ovars)]
             ids: Dict[str, str] = {}
@@ -1347,32 +1363,42 @@ class Compiler:
                         inner.ids)
 
     def _c_Values(self, n: A.Values, graph_ctx) -> Compiled:
-        from pyspark.sql.types import StructField, StructType
-        schema = StructType([StructField(v.name, T.TERM_SCHEMA)
-                             for v in n.vars])
-        rows = [tuple(_term_to_py(t) for t in row) for row in n.rows]
-        # createDataFrame over a nested TERM-struct schema takes the RDD
-        # path, so the plan node is Scan ExistingRDD with UNKNOWN size
-        # statistics (= assumed huge): the join with the solution set can
-        # then never be planned as broadcast, and P4-shaped queries paid
-        # a SortMergeJoin with two exchanges+sorts against a 2-row
-        # inline table (plans/r09/P4_values_before.txt).  A VALUES block
-        # is bounded small by construction — it is literal query text —
-        # so the broadcast hint is sound at any data scale (guide §3.1:
-        # "estimates are often badly wrong … use an explicit broadcast
-        # hint when you know a side is small").  Guard: programmatic
-        # clients can inline very large binding lists; above a few
-        # thousand rows fall back to the planner's choice so a 1e6-row
-        # VALUES degrades to SortMergeJoin instead of an executor-wide
-        # broadcast (r10 advisory).
-        df = self.spark.createDataFrame(rows, schema)
-        if len(n.rows) <= 10000:
-            df = df.hint("broadcast")
+        # A VALUES block is literal query text, so it is bounded small by
+        # construction and the broadcast hint is sound at any data scale
+        # (without it P4-shaped queries paid a SortMergeJoin with two
+        # exchanges+sorts against a 2-row inline table,
+        # plans/r09/P4_values_before.txt).  Its rows are built in the JVM:
+        # one JSON string literal that Catalyst parses and folds once
+        # (from_json; a SQL named_struct per cell took seconds to analyze
+        # at 10,000 rows), exploded over a one-partition, one-row range.
+        # createDataFrame would plan a Scan ExistingRDD, a Python-RDD
+        # job for every run.  Programmatic clients can inline very large
+        # binding lists: above 10,000 rows the query text itself is
+        # bulk data, so those rows ship through createDataFrame (one
+        # measurement at 200,000 rows, 4 cores: 5 s against 13 s for the
+        # folded literal) without the hint, and the planner picks the
+        # join (a 1e6-row VALUES degrades to SortMergeJoin instead of an
+        # executor-wide broadcast).
         names = frozenset(v.name for v in n.vars)
         certain = frozenset(
             v.name for i, v in enumerate(n.vars)
             if all(row[i] is not None for row in n.rows))
-        return Compiled(df, names, certain)
+        schema = StructType([StructField(v.name, T.TERM_SCHEMA)
+                             for v in n.vars])
+        if len(n.rows) > 10000:
+            rows = [tuple(_term_to_py(t) for t in row) for row in n.rows]
+            return Compiled(self.spark.createDataFrame(rows, schema),
+                            names, certain)
+        if not n.vars:  # VALUES () { () … }: one empty solution per row
+            df = self.spark.range(len(n.rows), numPartitions=1).select()
+        else:
+            doc = json.dumps([{v.name: _term_json(t)
+                               for v, t in zip(n.vars, row)}
+                              for row in n.rows])
+            df = self.spark.range(1, numPartitions=1).select(F.inline(
+                F.from_json(F.lit(doc), ArrayType(schema),
+                            {"timestampFormat": _VALUES_TS_PATTERN})))
+        return Compiled(df.hint("broadcast"), names, certain)
 
     def _c_Graph(self, n: A.Graph, graph_ctx) -> Compiled:
         sol = self.compile_pattern(n.inner, n.name)
@@ -2374,11 +2400,28 @@ def _const_term_sql(t: A.GroundTerm) -> Optional[str]:
     return f"named_struct({', '.join(parts)})"
 
 
+# VALUES `ts` payload text: Python strftime / Spark from_json pattern
+_VALUES_TS_FMT = "%Y-%m-%dT%H:%M:%S.%f"
+_VALUES_TS_PATTERN = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
+
+
+def _term_json(t: Optional[A.GroundTerm]):
+    """VALUES cell → TERM struct as a JSON object (UNDEF → null), with the
+    ``_term_to_py`` payload.  ``num`` is sent as the DECIMAL(38,18)
+    text (NULL past its range, like a CAST), ``ts`` as UTC wall time."""
+    if t is None:
+        return None
+    kind, lex, dt, lang, num, dbl, ts, tz, b = _term_to_py(t)
+    num = None if num is None else _term_decimal(num)
+    return {"kind": kind, "lex": lex, "datatype": dt, "lang": lang,
+            "num": None if num is None else format(num, "f"), "dbl": dbl, "tz_min": tz, "bool": b,
+            "ts": None if ts is None else ts.strftime(_VALUES_TS_FMT)}
+
+
 def _term_to_py(t: Optional[A.GroundTerm]):
     """Ground term → TERM struct Row tuple (for VALUES)."""
     if t is None:
         return None
-    from decimal import Decimal
     kind, lex, datatype, lang = None, None, None, None
     num = dbl = ts = tz = b = None
     if isinstance(t, A.NamedNode):
@@ -2516,50 +2559,97 @@ _NATIVE_CMP_FLIP = {"<": "gt", "<=": "ge", ">": "lt", ">=": "le",
                     "=": "eq", "!=": "ne"}
 _NATIVE_STR_FNS = {"STRSTARTS": "startswith", "STRENDS": "endswith",
                    "CONTAINS": "contains"}
+# ordering comparisons on strings stay pruning hints; these are exact
+_EXACT_STR_OPS = frozenset(("eq", "ne"))
+_DECIMAL_LEX = re.compile(r"[+-]?(\d+(\.\d*)?|\.\d+)")
+_DOUBLE_LEX = re.compile(r"[+-]?(\d+(\.\d*)?|\.\d+)([eE][+-]?\d+)?")
+_TERM_DECIMAL_ULP = Decimal(1).scaleb(-18)
+_TERM_DECIMAL_CTX = Context(prec=80, rounding=ROUND_HALF_UP)
 
 
-def _native_lit_value(lit: A.Literal, vc: Optional[int]):
-    """SPARQL literal → Python value for a native column predicate, or
-    None when the literal's class doesn't match the column's class (the
-    term-level filter then decides — we just can't prune)."""
+def _term_decimal(d: Decimal) -> Optional[Decimal]:
+    """``d`` as a term's DECIMAL(38,18) ``num`` payload, with CAST
+    semantics: HALF_UP to 18 fractional digits, None from 10^20 up."""
+    if not d.is_finite() or d.adjusted() >= 20:
+        return None
+    d = d.quantize(_TERM_DECIMAL_ULP, context=_TERM_DECIMAL_CTX)
+    return d if abs(d) < 10 ** 20 else None
+
+
+def _native_lit_value(lit: A.Literal, vc: Optional[int],
+                      nsub: Optional[str]):
+    """SPARQL literal → (value, exact) for a native predicate on a column
+    of value class ``vc`` (numeric subtype ``nsub``), or None when the
+    literal has no sound native form (the term-level filter decides
+    alone).
+
+    Numeric values are the ones the term comparison uses.  An
+    integer/decimal literal is its DECIMAL(38,18) payload, compared
+    exactly against an integer column (``_native_cond`` rounds the
+    bound) and as a double against a double column.  A float/double
+    literal is a double, which an integer column compares in double:
+    exact while |x| ≤ 2^53, where every integer is a double; beyond
+    that (and for NaN/INF) there is no native form.  Datetime values
+    (timezone semantics) and booleans are hints only."""
     dt = lit.datatype or T.XSD_STRING
     try:
         if vc == K.VC_NUMERIC and dt in T.NUMERIC_DATATYPES:
-            return float(lit.lex) if "." in lit.lex or "e" in lit.lex.lower() \
-                or dt in (T.XSD_DOUBLE, T.XSD_FLOAT, T.XSD_DECIMAL) \
-                else int(lit.lex)
+            if dt in (T.XSD_FLOAT, T.XSD_DOUBLE):
+                if not _DOUBLE_LEX.fullmatch(lit.lex):
+                    return None
+                f = float(lit.lex)
+                if nsub == "double" and math.isfinite(f):
+                    return f, True
+                if nsub == "integer" and abs(f) <= 2 ** 53:
+                    return Decimal(f), True
+                return None
+            d = _term_decimal(Decimal(lit.lex)) \
+                if _DECIMAL_LEX.fullmatch(lit.lex) else None
+            if d is None:
+                return None
+            if nsub == "integer":
+                return d, True
+            return (float(d), True) if nsub == "double" else None
         if vc == K.VC_STRING and dt == T.XSD_STRING and not lit.lang:
-            return lit.lex
+            return lit.lex, True
         if vc == K.VC_DATETIME and dt in (T.XSD_DATETIME, T.XSD_DATE):
             v = datetime.fromisoformat(lit.lex.replace("Z", "+00:00"))
             if v.tzinfo is not None:
                 v = v.astimezone(timezone.utc).replace(tzinfo=None)
-            return v
+            return v, False
         if vc == K.VC_BOOLEAN and dt == T.XSD_BOOLEAN:
-            return lit.lex in ("true", "1")
+            return lit.lex in ("true", "1"), False
     except ValueError:
         return None
     return None
 
 
-def _native_preds(e: A.Expression, var: str, vc: Optional[int]):
-    """FILTER conjunct over one scan variable → [(op, value)] native
-    predicates IMPLIED by it (for parquet pushdown), or None.  Must be
-    conservative: a translated predicate may only drop rows the term
-    filter would drop anyway."""
+def _native_preds(e: A.Expression, var: str, vc: Optional[int],
+                  nsub: Optional[str]):
+    """FILTER conjunct over one scan variable → ([(op, value)], exact)
+    for the scan's raw column, or None.  Every translation is sound: the
+    native predicate keeps at least the rows the conjunct keeps.  It is
+    ``exact`` when it keeps exactly those rows among the column's
+    non-null values; the caller then drops the conjunct once the scan
+    applied it.  Otherwise it only prunes, and the term-level filter
+    still runs above."""
     if vc is None:
         return None
     if isinstance(e, A.EOp) and e.op in _NATIVE_CMP and len(e.args) == 2:
         a, b = e.args
         if isinstance(a, A.EVar) and a.name == var \
                 and isinstance(b, A.ETerm) and isinstance(b.term, A.Literal):
-            v = _native_lit_value(b.term, vc)
-            return None if v is None else [(_NATIVE_CMP[e.op], v)]
-        if isinstance(b, A.EVar) and b.name == var \
+            op, lit = _NATIVE_CMP[e.op], b.term
+        elif isinstance(b, A.EVar) and b.name == var \
                 and isinstance(a, A.ETerm) and isinstance(a.term, A.Literal):
-            v = _native_lit_value(a.term, vc)
-            return None if v is None else [(_NATIVE_CMP_FLIP[e.op], v)]
-        return None
+            op, lit = _NATIVE_CMP_FLIP[e.op], a.term
+        else:
+            return None
+        v = _native_lit_value(lit, vc, nsub)
+        if v is None:
+            return None
+        return [(op, v[0])], v[1] and (
+            vc != K.VC_STRING or op in _EXACT_STR_OPS)
     if isinstance(e, A.ECall) and e.name.upper() in _NATIVE_STR_FNS \
             and vc == K.VC_STRING and len(e.args) == 2:
         a, b = e.args
@@ -2567,19 +2657,20 @@ def _native_preds(e: A.Expression, var: str, vc: Optional[int]):
                 and isinstance(b, A.ETerm) and isinstance(b.term, A.Literal) \
                 and not b.term.lang \
                 and (b.term.datatype or T.XSD_STRING) == T.XSD_STRING:
-            return [(_NATIVE_STR_FNS[e.name.upper()], b.term.lex)]
+            return [(_NATIVE_STR_FNS[e.name.upper()], b.term.lex)], True
         return None
     if isinstance(e, A.EIn) and not e.negated \
             and isinstance(e.expr, A.EVar) and e.expr.name == var:
-        vals = []
+        vals, exact = [], True
         for o in e.options:
             if not (isinstance(o, A.ETerm) and isinstance(o.term, A.Literal)):
                 return None
-            v = _native_lit_value(o.term, vc)
+            v = _native_lit_value(o.term, vc, nsub)
             if v is None:
                 return None
-            vals.append(v)
-        return [("isin", vals)] if vals else None
+            vals.append(v[0])
+            exact = exact and v[1]
+        return ([("isin", vals)], exact) if vals else None
     return None
 
 

@@ -19,7 +19,9 @@ changes.
 
 from __future__ import annotations
 
+import math
 import os
+from decimal import Decimal
 from typing import Dict, Iterable, Optional, Tuple
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
@@ -116,11 +118,29 @@ def _iri_int_suffix(iri: str, base: str) -> Optional[int]:
     return _canonical_int(iri[len(base):])
 
 
+_INT_BITS = {"tinyint": 8, "smallint": 16, "int": 32, "bigint": 64}
+
+
 def _native_cond(c: Column, dtype: str, op: str, val) -> Column:
-    """One pushable predicate on a raw source column.  The literal is cast
-    to the COLUMN's exact type (a foldable cast on the constant side) so
-    the column reference stays bare and translates to a data source
-    filter — a cast on the column side would block parquet pushdown."""
+    """One pushable predicate on a raw source column that keeps exactly
+    the non-null values the SPARQL comparison keeps, for the literal
+    values the compiler hands over (``_native_preds``: int/Decimal for
+    integer columns, float for double columns, str for strings).
+
+    The literal is cast to the COLUMN's exact type (a foldable cast on
+    the constant side) so the column reference stays bare and
+    translates to a data source filter — a cast on the column side
+    would block parquet pushdown.  Integer columns round the bound
+    instead of truncating it (``< 5.5`` keeps 5); double columns add
+    ``NOT isnan`` to ``>``/``>=``, since Spark orders NaN above every
+    number while a SPARQL comparison with NaN is false."""
+    dtype = dtype.lower()
+    if dtype in _INT_BITS:
+        return _int_cond(c, dtype, op, val)
+    if dtype == "float":
+        # the term value is the widened double: compare there (exact,
+        # not pushable — no source column in the fixtures is float)
+        c, dtype = c.cast("double"), "double"
     if op == "isin":
         return c.isin(*[F.lit(v).cast(dtype) for v in val])
     lit = F.lit(val).cast(dtype)
@@ -128,10 +148,9 @@ def _native_cond(c: Column, dtype: str, op: str, val) -> Column:
         return c < lit
     if op == "le":
         return c <= lit
-    if op == "gt":
-        return c > lit
-    if op == "ge":
-        return c >= lit
+    if op in ("gt", "ge"):
+        cond = c > lit if op == "gt" else c >= lit
+        return cond & ~F.isnan(c) if dtype == "double" else cond
     if op == "eq":
         return c == lit
     if op == "ne":
@@ -143,6 +162,52 @@ def _native_cond(c: Column, dtype: str, op: str, val) -> Column:
     if op == "contains":
         return c.contains(val)
     raise ValueError(f"native op {op}")
+
+
+def _int_cond(c: Column, dtype: str, op: str, val) -> Column:
+    """``_native_cond`` on an integer column: ``val`` (int or Decimal, or
+    a list of them for ``isin``) is the exact value SPARQL compares in
+    the decimal lattice.  ``< x`` keeps ``< ceil(x)``, ``<= x`` keeps
+    ``<= floor(x)``, ``> x`` keeps ``> floor(x)``, ``>= x`` keeps
+    ``>= ceil(x)``; ``= x`` with a non-integral ``x`` keeps no row and
+    ``!= x`` every row.  A bound outside the column type's range makes
+    the predicate constant instead of overflowing the cast."""
+    bits = _INT_BITS[dtype]
+    lo, hi = -(1 << (bits - 1)), (1 << (bits - 1)) - 1
+
+    def key(x) -> Optional[int]:
+        """x as a value of the column's type, or None."""
+        x = Decimal(x)
+        return int(x) if x == x.to_integral_value() and lo <= x <= hi \
+            else None
+
+    def lit(n: int) -> Column:
+        return F.lit(n).cast(dtype)
+
+    if op == "isin":
+        keys = [k for k in map(key, val) if k is not None]
+        return c.isin(*map(lit, keys)) if keys else F.lit(False)
+    if op in ("eq", "ne"):
+        k = key(val)
+        if k is None:
+            return F.lit(op == "ne")
+        return c == lit(k) if op == "eq" else c != lit(k)
+    x = Decimal(val)
+    if op in ("lt", "ge"):
+        b = math.ceil(x)
+        if b > hi:
+            return F.lit(op == "lt")
+        if b <= lo:
+            return F.lit(op == "ge")
+        return c < lit(b) if op == "lt" else c >= lit(b)
+    if op in ("le", "gt"):
+        b = math.floor(x)
+        if b >= hi:
+            return F.lit(op == "le")
+        if b < lo:
+            return F.lit(op == "gt")
+        return c <= lit(b) if op == "le" else c > lit(b)
+    raise ValueError(f"native op {op} on an integer column")
 
 
 class DirectMappingSource:
@@ -336,12 +401,14 @@ class DirectMappingSource:
         no solution, inner-join semantics).
 
         ``native_filters`` maps predicate index → [(op, value)] predicates
-        implied by the query's FILTERs, applied on the RAW source column
-        BEFORE term structs are built.  Because they reference plain
-        columns they reach the parquet scan as PushedFilters (row-group/
-        page pruning — the thing that matters at 100 TB); the compiler
-        keeps the full term-level filter above, so these are pure pruning
-        hints and never change semantics.
+        derived from the query's FILTERs (see :func:`_native_cond`),
+        applied on the RAW source column BEFORE term structs are built.
+        Because they reference plain columns they reach the parquet scan
+        as PushedFilters (row-group/page pruning — the thing that matters
+        at 100 TB).  Every predicate given is applied, and each keeps at
+        least the rows its FILTER conjunct keeps; for a conjunct whose
+        translation is exact the compiler compiles no term-level filter
+        at all, for the others (hints) the term filter still runs above.
 
         ``const_preds`` is a list of (p_lex, op, value) EXACT native
         predicates from collapsed constant-object patterns
@@ -472,8 +539,10 @@ class DirectMappingSource:
         Returns an empty frame for a predicate that cannot match.
 
         ``native_filters`` ([(op, value)], see ``star_scan``) applies
-        implied predicates on the RAW object column before the term
-        structs are built, so they reach parquet as PushedFilters."""
+        FILTER-derived predicates on the RAW object column of a
+        literal-valued predicate before the term structs are built, so
+        they reach parquet as PushedFilters; the compiler relies on all
+        of them being applied (exact ones replace the term filter)."""
         if p_lex is not None:
             if p_lex in self._frames:
                 if native_filters:

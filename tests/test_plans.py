@@ -471,3 +471,154 @@ def test_optional_chain_star_fusion(spark, sf_dir):
     rows = df.collect()
     assert all(r["st"] is None for r in rows)
     assert all(r["tp"] is not None for r in rows)
+
+
+def _filters(plan):
+    """Condition text of every physical Filter node."""
+    return [ln.split("Filter ", 1)[1] for ln in plan.splitlines()
+            if re.search(r"(^|[\s*)])Filter \(", ln)]
+
+
+def test_exact_native_filter_runs_once_at_scan(spark, sf_dir):
+    """A FILTER conjunct that translates exactly to a raw-column
+    predicate is applied at the scan only: PushedFilters carries it and
+    no Filter rebuilds the TERM struct to re-check it (the T6 shape of
+    the explore benchmark)."""
+    import __spark_entry__ as E
+    store = E._store(spark, sf_dir)
+    q = E.PFX + ("SELECT ?st (COUNT(*) AS ?cnt) WHERE { ?o o:o_orderstatus "
+                 "?st ; o:o_custkey ?ck . FILTER(?ck < 77) } GROUP BY ?st")
+    df = store.query(q, use_cache=False)
+    plan = _plan(df)
+    assert re.search(r"PushedFilters: \[[^\]]*LessThan\(o_custkey,77\)", plan)
+    assert not any("struct(" in f for f in _filters(plan)), plan
+    got = {r["st"]["lex"]: int(r["cnt"]["lex"]) for r in df.collect()}
+    import duckdb
+    want = dict(duckdb.connect().execute(
+        f"SELECT o_orderstatus, count(*) FROM '{sf_dir}/orders.parquet' "
+        "WHERE o_custkey < 77 GROUP BY 1").fetchall())
+    assert got == want
+
+
+def test_hint_only_native_filters_keep_term_filter(spark, sf_dir):
+    """Datetime conjuncts (timezone semantics) still prune the scan but
+    keep their term-level filter; an INF literal has no native form and
+    is filtered on the term alone."""
+    import __spark_entry__ as E
+    store = E._store(spark, sf_dir)
+    dt = store.query(E.PFX + (
+        'SELECT ?o WHERE { ?o o:o_orderdate ?d . '
+        'FILTER(?d < "1995-01-01T00:00:00"^^xsd:dateTime) }'),
+        use_cache=False)
+    plan = _plan(dt)
+    assert re.search(r"PushedFilters: \[[^\]]*LessThan\(o_orderdate,", plan)
+    assert any("struct(" in f for f in _filters(plan)), plan
+    inf = store.query(E.PFX + (
+        'SELECT ?c WHERE { ?c c:c_acctbal ?b . '
+        'FILTER(?b < "INF"^^xsd:double) }'), use_cache=False)
+    plan = _plan(inf)
+    assert "LessThan(c_acctbal" not in plan
+    assert any("struct(" in f for f in _filters(plan)), plan
+    assert inf.count() == store.query(
+        E.PFX + "SELECT ?c WHERE { ?c c:c_acctbal ?b }").count()
+
+
+def test_native_bound_rounding_regressions(spark):
+    """Decimal literals against an integer column: the native bound
+    rounds instead of truncating (`F.lit(5.5).cast("bigint")` is 5, which
+    dropped key 5 from `?k < 5.5`)."""
+    import __spark_entry__ as E
+    from oxigraph_spark.store import Store
+    from tests.conftest import SF01_DIR
+    st = Store.from_tables(spark, SF01_DIR, tables=["customer"])
+
+    def keys(body):
+        q = E.PFX + "SELECT ?k WHERE { ?c c:c_custkey ?k " + body + " }"
+        return sorted(int(r["k"]["lex"])
+                      for r in st.query(q, use_cache=False).collect())
+
+    assert keys(". FILTER(?k < 5.5)") == [0, 1, 2, 3, 4, 5]
+    assert keys("; c:c_name ?n . FILTER(?k > -0.5 && ?k < 3)") == [0, 1, 2]
+    assert keys("; c:c_name ?n . FILTER(?k != 2.5 && ?k < 4)") \
+        == [0, 1, 2, 3]
+    assert keys(". FILTER(?k = 2.5)") == []
+    assert keys(". FILTER(?k IN (1, 2.5, 3.0))") == [1, 3]
+    assert keys(". FILTER(?k >= 146.5 && ?k < 150)") == [147, 148, 149]
+    assert keys(". FILTER(?k <= 1.999)") == [0, 1]
+
+
+def test_optional_member_conjunct_not_consumed(spark, sf_dir):
+    """A FILTER over a variable bound only inside OPTIONAL is never
+    turned into a scan predicate: rows where the optional is unbound
+    must still be removed (the filter errors there), and the OPTIONAL's
+    own filter keeps rows with the value unbound."""
+    import __spark_entry__ as E
+    from oxigraph_spark.store import Store
+    store = E._store(spark, sf_dir)
+    un = Store(spark, store.source, optimize=False)
+    key = lambda rows: sorted(
+        (r["nm"]["lex"], r["bal"]["lex"] if r["bal"] else None)
+        for r in rows)
+    outer = E.PFX + """SELECT ?nm ?bal WHERE { ?s s:s_name ?nm
+        OPTIONAL { ?s s:s_acctbal ?bal } FILTER(?bal > 4000) }"""
+    rows = store.query(outer, use_cache=False).collect()
+    assert rows and all(r["bal"] is not None
+                        and float(r["bal"]["lex"]) > 4000 for r in rows)
+    assert key(rows) == key(un.query(outer, use_cache=False).collect())
+    inner = E.PFX + """SELECT ?nm ?bal WHERE { ?s s:s_name ?nm
+        OPTIONAL { ?s s:s_acctbal ?bal FILTER(?bal > 4000) } }"""
+    rows = store.query(inner, use_cache=False).collect()
+    assert any(r["bal"] is None for r in rows)
+    assert key(rows) == key(un.query(inner, use_cache=False).collect())
+
+
+def test_values_rows_built_in_jvm(spark, sf_dir):
+    """VALUES rows are a JVM literal (no Python-RDD Scan ExistingRDD)
+    and keep the broadcast hint (the T9 shape of the explore
+    benchmark)."""
+    import __spark_entry__ as E
+    store = E._store(spark, sf_dir)
+    q = E.PFX + """SELECT ?nn WHERE { VALUES ?rn { "ASIA" "EUROPE" }
+        ?r r:r_name ?rn . ?n n:ref_region ?r ; n:n_name ?nn }"""
+    df = store.query(q, use_cache=False)
+    plan = _plan(df)
+    assert "ExistingRDD" not in plan
+    assert "BroadcastExchange" in plan
+    import duckdb
+    want = sorted(r[0] for r in duckdb.connect().execute(
+        f"SELECT n_name FROM '{sf_dir}/nation.parquet' JOIN "
+        f"'{sf_dir}/region.parquet' ON n_regionkey = r_regionkey "
+        "WHERE r_name IN ('ASIA', 'EUROPE')").fetchall())
+    assert sorted(r["nn"]["lex"] for r in df.collect()) == want
+
+
+def test_values_undef_and_large(spark, sf_dir):
+    """VALUES with UNDEF cells (NULL terms: unbound, joining anything)
+    and with more rows than the 10,000-row broadcast bound."""
+    import __spark_entry__ as E
+    store = E._store(spark, sf_dir)
+    rows = store.query(
+        'SELECT ?a ?b WHERE { VALUES (?a ?b) { (1 UNDEF) '
+        '(UNDEF "x"@en) ("P1Y"^^<http://www.w3.org/2001/XMLSchema#duration>'
+        ' 2.5) } }', use_cache=False).collect()
+    cells = sorted((
+        tuple((c["lex"], c["datatype"], c["lang"]) if c else None
+              for c in (r["a"], r["b"])) for r in rows), key=repr)
+    xsd = "http://www.w3.org/2001/XMLSchema#"
+    rdf = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
+    assert cells == sorted([
+        (("1", xsd + "integer", None), None),
+        (None, ("x", rdf + "langString", "en")),
+        (("P1Y", xsd + "duration", None), ("2.5", xsd + "decimal", None))],
+        key=repr)
+    all_keys = [int(r["k"]["lex"]) for r in store.query(
+        E.PFX + "SELECT ?k WHERE { ?c c:c_custkey ?k }").collect()]
+    q = E.PFX + "SELECT ?c WHERE { VALUES ?k { 1 2 UNDEF } ?c c:c_custkey ?k }"
+    assert store.query(q, use_cache=False).count() \
+        == len(all_keys) + len({1, 2} & set(all_keys))
+    big = " ".join(str(i) for i in range(0, 20020, 2))  # 10,010 rows
+    q = E.PFX + ("SELECT ?k WHERE { VALUES ?k { " + big + " } "
+                 "?c c:c_custkey ?k }")
+    got = sorted(int(r["k"]["lex"])
+                 for r in store.query(q, use_cache=False).collect())
+    assert got == sorted(k for k in all_keys if k % 2 == 0 and k < 20020)

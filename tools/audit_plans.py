@@ -8,6 +8,9 @@ Checks per entry:
 - ``exchanges``: shuffle count (lower is better; informational).
 - ``scans`` / ``pushed``: parquet scans and how many carry pushed
   filters (bound-predicate scans should push).
+- ``python_nodes``: plan nodes that run Python (``Scan ExistingRDD``
+  over a Python RDD, ``BatchEvalPython``, ``ArrowEvalPython``) — a
+  Python round trip inside a SPARQL plan (informational).
 
 Usage: python tools/audit_plans.py [--sf DIR]
 Prints one JSON object keyed by entry name, then a summary line.
@@ -54,11 +57,14 @@ def main() -> None:
                      or "BroadcastNestedLoopJoin" in plan)
         scans = len(re.findall(r"FileScan parquet|Scan parquet", plan))
         pushed = len(re.findall(r"PushedFilters: \[(?!\])", plan))
+        python_nodes = len(re.findall(
+            r"ExistingRDD|BatchEvalPython|ArrowEvalPython", plan))
         out[name] = {
             "cartesian": cartesian,
             "exchanges": plan.count("Exchange"),
             "scans": scans,
             "scans_with_pushdown": pushed,
+            "python_nodes": python_nodes,
         }
         if cartesian and name not in ALLOWED_NESTED_LOOP:
             bad.append(name)
