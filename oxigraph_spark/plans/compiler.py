@@ -22,7 +22,6 @@ Scale-critical choices:
 
 from __future__ import annotations
 
-import inspect
 import itertools
 import json
 import math
@@ -442,10 +441,6 @@ class Compiler:
                  service_pool: int = 4):
         self.spark = spark
         self.source = source  # exposes .scan(p_lex) -> DataFrame(s,p,o,g)
-        # DirectMappingSource.scan applies FILTER-derived raw-column
-        # predicates (native_filters) before building term structs
-        self._native_scans = "native_filters" in inspect.signature(
-            source.scan).parameters
         self.optimize = optimize
         # False disables the FedX bind-join seed (used by explain-only
         # compilation: seeding collects local bindings, i.e. runs Spark
@@ -735,9 +730,9 @@ class Compiler:
         """Raw-column predicates for the scan of ``?s <p_lex> ?var`` from
         the conjuncts in ``pending`` over ``?var`` alone: ([(op, value)],
         [conjuncts translated exactly]).  Both are empty when the
-        source's scans take no native filters."""
+        source has no typed raw columns (no ``pred_types``)."""
         pt = getattr(self.source, "pred_types", None)
-        if pt is None or not self._native_scans:
+        if pt is None:
             return [], []
         vc, nsub = pt(p_lex)
         preds: List = []
@@ -1363,42 +1358,33 @@ class Compiler:
                         inner.ids)
 
     def _c_Values(self, n: A.Values, graph_ctx) -> Compiled:
-        # A VALUES block is literal query text, so it is bounded small by
-        # construction and the broadcast hint is sound at any data scale
-        # (without it P4-shaped queries paid a SortMergeJoin with two
-        # exchanges+sorts against a 2-row inline table,
-        # plans/r09/P4_values_before.txt).  Its rows are built in the JVM:
-        # one JSON string literal that Catalyst parses and folds once
-        # (from_json; a SQL named_struct per cell took seconds to analyze
-        # at 10,000 rows), exploded over a one-partition, one-row range.
-        # createDataFrame would plan a Scan ExistingRDD, a Python-RDD
-        # job for every run.  Programmatic clients can inline very large
-        # binding lists: above 10,000 rows the query text itself is
-        # bulk data, so those rows ship through createDataFrame (one
-        # measurement at 200,000 rows, 4 cores: 5 s against 13 s for the
-        # folded literal) without the hint, and the planner picks the
-        # join (a 1e6-row VALUES degrades to SortMergeJoin instead of an
-        # executor-wide broadcast).
+        # Its rows are built in the JVM: one JSON string literal that
+        # Catalyst parses and folds once (from_json; a SQL named_struct
+        # per cell took seconds to analyze at 10,000 rows), exploded over
+        # a one-partition, one-row range.  createDataFrame would plan a
+        # Scan ExistingRDD, a Python-RDD job for every run.  A VALUES
+        # block is literal query text, so it is small by construction and
+        # up to 10,000 rows it gets the broadcast hint (without it
+        # P4-shaped queries paid a SortMergeJoin with two exchanges+sorts
+        # against a 2-row inline table, plans/r09/P4_values_before.txt).
+        # Programmatic clients can inline larger binding lists; there the
+        # planner picks the join (a 1e6-row VALUES degrades to
+        # SortMergeJoin instead of an executor-wide broadcast).
         names = frozenset(v.name for v in n.vars)
         certain = frozenset(
             v.name for i, v in enumerate(n.vars)
             if all(row[i] is not None for row in n.rows))
         schema = StructType([StructField(v.name, T.TERM_SCHEMA)
                              for v in n.vars])
-        if len(n.rows) > 10000:
-            rows = [tuple(_term_to_py(t) for t in row) for row in n.rows]
-            return Compiled(self.spark.createDataFrame(rows, schema),
-                            names, certain)
-        if not n.vars:  # VALUES () { () … }: one empty solution per row
-            df = self.spark.range(len(n.rows), numPartitions=1).select()
-        else:
-            doc = json.dumps([{v.name: _term_json(t)
-                               for v, t in zip(n.vars, row)}
-                              for row in n.rows])
-            df = self.spark.range(1, numPartitions=1).select(F.inline(
-                F.from_json(F.lit(doc), ArrayType(schema),
-                            {"timestampFormat": _VALUES_TS_PATTERN})))
-        return Compiled(df.hint("broadcast"), names, certain)
+        doc = json.dumps([{v.name: _term_json(t)
+                           for v, t in zip(n.vars, row)}
+                          for row in n.rows])
+        df = self.spark.range(1, numPartitions=1).select(F.inline(
+            F.from_json(F.lit(doc), ArrayType(schema),
+                        {"timestampFormat": _VALUES_TS_PATTERN})))
+        if len(n.rows) <= 10000:
+            df = df.hint("broadcast")
+        return Compiled(df, names, certain)
 
     def _c_Graph(self, n: A.Graph, graph_ctx) -> Compiled:
         sol = self.compile_pattern(n.inner, n.name)
@@ -2400,8 +2386,8 @@ def _const_term_sql(t: A.GroundTerm) -> Optional[str]:
     return f"named_struct({', '.join(parts)})"
 
 
-# VALUES `ts` payload text: Python strftime / Spark from_json pattern
-_VALUES_TS_FMT = "%Y-%m-%dT%H:%M:%S.%f"
+# Spark from_json pattern of the VALUES `ts` payload text, which
+# datetime.isoformat(timespec="microseconds") writes (4-digit year)
 _VALUES_TS_PATTERN = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
 
 
@@ -2414,8 +2400,9 @@ def _term_json(t: Optional[A.GroundTerm]):
     kind, lex, dt, lang, num, dbl, ts, tz, b = _term_to_py(t)
     num = None if num is None else _term_decimal(num)
     return {"kind": kind, "lex": lex, "datatype": dt, "lang": lang,
-            "num": None if num is None else format(num, "f"), "dbl": dbl, "tz_min": tz, "bool": b,
-            "ts": None if ts is None else ts.strftime(_VALUES_TS_FMT)}
+            "num": None if num is None else format(num, "f"), "dbl": dbl,
+            "tz_min": tz, "bool": b,
+            "ts": None if ts is None else ts.isoformat(timespec="microseconds")}
 
 
 def _term_to_py(t: Optional[A.GroundTerm]):
@@ -2586,11 +2573,12 @@ def _native_lit_value(lit: A.Literal, vc: Optional[int],
     Numeric values are the ones the term comparison uses.  An
     integer/decimal literal is its DECIMAL(38,18) payload, compared
     exactly against an integer column (``_native_cond`` rounds the
-    bound) and as a double against a double column.  A float/double
-    literal is a double, which an integer column compares in double:
-    exact while |x| ≤ 2^53, where every integer is a double; beyond
-    that (and for NaN/INF) there is no native form.  Datetime values
-    (timezone semantics) and booleans are hints only."""
+    bound) and as a double against a double column.  A finite
+    float/double literal is exact against a double column.  Against an
+    integer column SPARQL compares in double, which rounds column values
+    past 2^53 as well, so no literal bound is exact there: no native
+    form, like NaN/INF.  Datetime values (timezone semantics) and
+    booleans are hints only."""
     dt = lit.datatype or T.XSD_STRING
     try:
         if vc == K.VC_NUMERIC and dt in T.NUMERIC_DATATYPES:
@@ -2600,8 +2588,6 @@ def _native_lit_value(lit: A.Literal, vc: Optional[int],
                 f = float(lit.lex)
                 if nsub == "double" and math.isfinite(f):
                     return f, True
-                if nsub == "integer" and abs(f) <= 2 ** 53:
-                    return Decimal(f), True
                 return None
             d = _term_decimal(Decimal(lit.lex)) \
                 if _DECIMAL_LEX.fullmatch(lit.lex) else None

@@ -165,15 +165,19 @@ def test_fuzz_sweep_promoted_oracle_seeds(spark, sf_dir, seed):
 # Native-filter generator: FILTER conjuncts the compiler applies as
 # raw-column predicates at the scan, most of them exactly (no term-level
 # re-check).  Decimal literals against integer keys exercise the bound
-# rounding (`?k < 5.5` keeps 5, `?k != 2.5` keeps every key), next to
-# =, !=, IN and string = / != / IN / STRSTARTS.
+# rounding (`?k < 5.5` keeps 5, `?k != 2.5` keeps every key); against a
+# double column they compare as doubles (`>`/`>=` also exclude NaN).
+# Next to them: =, !=, IN and string = / != / IN / STRSTARTS.
 NATIVE_TABLES = [
-    # (table, prefix, integer key, max key, [(string column, values)])
+    # (table, prefix, integer key, max key, [(string column, values)],
+    #  (double column, sample values))
     ("customer", "c", "c_custkey", 150,
      [("c_mktsegment", ["BUILDING", "MACHINERY", "HOUSEHOLD", "NONE"]),
-      ("c_name", ["Customer#000000007", "Customer#000000042"])]),
+      ("c_name", ["Customer#000000007", "Customer#000000042"])],
+     ("c_acctbal", [-846.69, 2095.23, 6281.08, 9916.12])),
     ("orders", "o", "o_orderkey", 1500,
-     [("o_orderstatus", ["F", "O", "P", "X"])]),
+     [("o_orderstatus", ["F", "O", "P", "X"])],
+     ("o_totalprice", [1320.51, 17263.63, 144449.04, 499705.05])),
 ]
 INT_OPS = ["<", "<=", ">", ">=", "=", "!="]
 
@@ -190,23 +194,40 @@ def _native_num(rng, hi):
     return f"{n}.{rng.choice(['5', '25', '75', '001', '999'])}"
 
 
+def _native_dbl(rng, vals):
+    """A decimal (sometimes integer) literal near a sample value of a
+    double column, sometimes that value itself (values of the sf0.001
+    tables, so `=` and IN can match)."""
+    v = rng.choice(vals)
+    r = rng.random()
+    if r < 0.3:
+        return f"{v:.2f}"
+    if r < 0.4:
+        return str(int(v))
+    return f"{v + rng.uniform(-1000, 1000):.2f}"
+
+
 def gen_native_case(seed: int):
     """seed → (sparql, sql, spec) for a scan whose FILTER conjuncts all
     translate to native column predicates."""
     rng = random.Random(seed)
-    table, pfx, key, hi, strs = rng.choice(NATIVE_TABLES)
+    table, pfx, key, hi, strs, (dcol, dvals) = rng.choice(NATIVE_TABLES)
     scol, svals = rng.choice(strs)
     star = rng.random() < 0.6        # star scan vs single-pattern scan
-    filters, wheres = [], [f"{key} IS NOT NULL"]
+    if rng.random() < 0.4:           # numeric conjuncts on the double column
+        col, var, kind, lit, near = dcol, "d", "double", _native_dbl, dvals
+    else:
+        col, var, kind, lit, near = key, "k", "long", _native_num, hi
+    filters, wheres = [], [f"{col} IS NOT NULL"]
     for _ in range(rng.randint(1, 2)):
         if rng.random() < 0.25:
-            opts = [_native_num(rng, hi) for _ in range(rng.randint(1, 4))]
-            filters.append(f"FILTER(?k IN ({', '.join(opts)}))")
-            wheres.append(f"{key} IN ({', '.join(opts)})")
+            opts = [lit(rng, near) for _ in range(rng.randint(1, 4))]
+            filters.append(f"FILTER(?{var} IN ({', '.join(opts)}))")
+            wheres.append(f"{col} IN ({', '.join(opts)})")
         else:
-            op, x = rng.choice(INT_OPS), _native_num(rng, hi)
-            filters.append(f"FILTER(?k {op} {x})")
-            wheres.append(f"{key} {op} {x}")
+            op, x = rng.choice(INT_OPS), lit(rng, near)
+            filters.append(f"FILTER(?{var} {op} {x})")
+            wheres.append(f"{col} {op} {x}")
     if star:
         wheres.append(f"{scol} IS NOT NULL")
         r, v = rng.random(), rng.choice(svals)
@@ -222,12 +243,12 @@ def gen_native_case(seed: int):
             p = v[:rng.randint(1, len(v))]
             filters.append(f'FILTER(STRSTARTS(?s, "{p}"))')
             wheres.append(f"starts_with({scol}, '{p}')")
-    pats = f"?x {pfx}:{key} ?k" + (f" ; {pfx}:{scol} ?s" if star else "")
-    sparql = (PFX + ("SELECT ?k ?s" if star else "SELECT ?k")
+    pats = f"?x {pfx}:{col} ?{var}" + (f" ; {pfx}:{scol} ?s" if star else "")
+    sparql = (PFX + (f"SELECT ?{var} ?s" if star else f"SELECT ?{var}")
               + " WHERE { " + pats + " . " + " ".join(filters) + " }")
-    sql = (f"SELECT {key} AS k" + (f", {scol} AS s" if star else "")
+    sql = (f"SELECT {col} AS {var}" + (f", {scol} AS s" if star else "")
            + f" FROM {table} WHERE " + " AND ".join(wheres))
-    spec = {"k": "long", **({"s": "str"} if star else {})}
+    spec = {var: kind, **({"s": "str"} if star else {})}
     return sparql, sql, spec
 
 

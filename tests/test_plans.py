@@ -502,8 +502,9 @@ def test_exact_native_filter_runs_once_at_scan(spark, sf_dir):
 
 def test_hint_only_native_filters_keep_term_filter(spark, sf_dir):
     """Datetime conjuncts (timezone semantics) still prune the scan but
-    keep their term-level filter; an INF literal has no native form and
-    is filtered on the term alone."""
+    keep their term-level filter; an INF literal, and a double literal
+    against an integer column, have no native form and are filtered on
+    the term alone."""
     import __spark_entry__ as E
     store = E._store(spark, sf_dir)
     dt = store.query(E.PFX + (
@@ -521,6 +522,17 @@ def test_hint_only_native_filters_keep_term_filter(spark, sf_dir):
     assert any("struct(" in f for f in _filters(plan)), plan
     assert inf.count() == store.query(
         E.PFX + "SELECT ?c WHERE { ?c c:c_acctbal ?b }").count()
+    # an integer column compares with a double literal in double, which
+    # rounds column values past 2^53 too: no native form at all
+    big = store.query(E.PFX + (
+        'SELECT ?c WHERE { ?c c:c_custkey ?k . '
+        'FILTER(?k <= "9007199254740992"^^xsd:double) }'),
+        use_cache=False)
+    plan = _plan(big)
+    assert "LessThanOrEqual(c_custkey" not in plan
+    assert any("struct(" in f for f in _filters(plan)), plan
+    assert big.count() == store.query(
+        E.PFX + "SELECT ?c WHERE { ?c c:c_custkey ?k }").count()
 
 
 def test_native_bound_rounding_regressions(spark):
@@ -619,6 +631,13 @@ def test_values_undef_and_large(spark, sf_dir):
     big = " ".join(str(i) for i in range(0, 20020, 2))  # 10,010 rows
     q = E.PFX + ("SELECT ?k WHERE { VALUES ?k { " + big + " } "
                  "?c c:c_custkey ?k }")
-    got = sorted(int(r["k"]["lex"])
-                 for r in store.query(q, use_cache=False).collect())
+    df = store.query(q, use_cache=False)
+    assert "ExistingRDD" not in _plan(df)
+    got = sorted(int(r["k"]["lex"]) for r in df.collect())
     assert got == sorted(k for k in all_keys if k % 2 == 0 and k < 20020)
+    # dates before year 1000 keep their `ts` payload (4-digit year text)
+    q = E.PFX + ('SELECT ?d WHERE { VALUES ?d { "0099-05-01"^^xsd:date '
+                 '"2020-01-02"^^xsd:date } '
+                 'FILTER(?d < "0100-01-01"^^xsd:date) }')
+    assert [r["d"]["lex"] for r in store.query(q, use_cache=False)
+            .collect()] == ["0099-05-01"]
